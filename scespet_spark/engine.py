@@ -4,9 +4,23 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
 setting here is chosen to also make sense on a large cluster:
 
 - AQE on (runtime re-planning, skew-join handling, partition coalescing).
-- ``spark.sql.shuffle.partitions`` sized to 2x cores locally; on a real
-  cluster you would size to 2-3x total executor cores or rely on AQE
-  coalescing from a high initial number.
+- Two shuffle partition counts, because batch and live plans pay for a
+  partition differently:
+
+  * batch Exchanges start at ``max(32, 2 * cpus)`` partitions
+    (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``, which
+    AQE reads ahead of ``spark.sql.shuffle.partitions``) and AQE
+    coalesces the small ones at runtime;
+  * live (Structured Streaming) queries run with AQE forced off, so
+    their stateful operators use ``spark.sql.shuffle.partitions`` as
+    is: one state-store partition, hence one task that loads the
+    store, feeds a Python worker and commits a delta file, per
+    micro-batch.  That count is ``cpus``, one task wave per batch.
+    It is frozen into each checkpoint's offset log, so a restarted
+    query keeps the count it started with.
+
+  On a real cluster size both to 2-3x total executor cores, or keep a
+  high initial number and rely on AQE coalescing for batch.
 - Arrow enabled so the pandas-UDF paths (custom reducers, multimodal
   decode) use vectorized Arrow batches instead of per-row pickling.
 - UTC session timezone so event-time arithmetic is stable across hosts.
@@ -32,11 +46,17 @@ def get_spark(
     sets): state spills to local disk with changelog checkpointing
     instead of living on the executor heap, so state size is bounded by
     disk, not memory.  Off by default locally (HDFS-backed in-memory
-    store is faster at test scale)."""
+    store is faster at test scale).
+
+    With ``shuffle_partitions=None`` a live query gets ``cpus``
+    state-store partitions (``spark.sql.shuffle.partitions``) and a
+    batch Exchange starts at ``max(32, 2 * cpus)`` partitions before AQE
+    coalescing (``initialPartitionNum``): streaming never runs AQE, and
+    every state partition costs one task per micro-batch however few
+    keys it holds.  An explicit ``shuffle_partitions`` sets
+    ``spark.sql.shuffle.partitions`` alone, for both kinds of plan."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(32, 2 * cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -59,7 +79,6 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
                 os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # join-strategy preference stays sort-merge (stock default):
         # preferSortMergeJoin=false (guide §3.1's shuffled-hash
         # preference) rode along in the regressed config above; it is
@@ -93,6 +112,14 @@ def get_spark(
             "RocksDBStateStoreProvider").config(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
             ".enabled", "true")
+    if shuffle_partitions is None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(cpus)).config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(max(32, 2 * cpus)))
+    else:
+        builder = builder.config("spark.sql.shuffle.partitions",
+                                 str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -16,8 +16,12 @@ the live counterparts:
     the streaming equivalent of the reference's mutable Agg/Reducer
     cells (types.scala:158-185).
 
-Scale notes: every construct here is executor-parallel keyed state —
-state store partitions follow ``spark.sql.shuffle.partitions``; at
+Scale notes: every construct here is executor-parallel keyed state.
+Streaming runs without AQE, so the state-store partition count is
+``spark.sql.shuffle.partitions`` as is (``engine.get_spark`` sets it
+to the core count; batch plans start from AQE's separate
+``initialPartitionNum``), and each partition costs one task per
+micro-batch.  A checkpoint keeps the count it was started with.  At
 cluster scale use RocksDB state store and watermarks tight enough to
 bound state size.
 """

@@ -5,19 +5,20 @@ from scespet_spark import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # r13 test profile: at fixture scale every job is scheduling-bound,
-    # so fewer shuffle partitions (fewer state stores per streaming
+    # Test profile: at fixture scale every job is scheduling-bound, so
+    # fewer shuffle partitions (fewer state stores per streaming
     # micro-batch, fewer tiny tasks) and no AQE re-optimization rounds
     # cut per-job latency — measured on test_streaming: 465s (8, AQE)
-    # -> 360s (2, no AQE), all tests green.  Bench/production sessions
-    # keep engine.get_spark defaults (AQE on, 2x-cores partitions);
-    # nothing here changes what any test asserts.
+    # -> 360s (2, no AQE), all tests green.  Constraint propagation
+    # stays on as in production: the plan tests assert the inferred
+    # IsNotNull filters it pushes into scans.  Bench/production
+    # sessions keep engine.get_spark defaults (AQE on, batch Exchanges
+    # from max(32, 2x cores) partitions, one live state partition per
+    # core); nothing here changes what any test asserts.
     s = get_spark(app_name="scespet-spark-tests", cpus=8,
                   shuffle_partitions=2,
                   extra_conf={"spark.sql.adaptive.enabled": "false",
-                              "spark.sql.codegen.wholeStage": "false",
-                              "spark.sql.constraintPropagation.enabled":
-                                  "false"})
+                              "spark.sql.codegen.wholeStage": "false"})
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

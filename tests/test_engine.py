@@ -1,0 +1,80 @@
+"""``engine.get_spark`` partition defaults.  Each case starts its own
+session in a child process: inside the suite ``getOrCreate`` would hand
+back the shared fixture session, and a second session in one process
+inherits the first one's settings from the JVM."""
+
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_PROBE = r"""
+import contextlib, io, json, shutil, sys, tempfile
+from scespet_spark import get_spark
+from scespet_spark.streaming.live import LiveStream
+
+kw = json.loads(sys.argv[1])
+spark = get_spark(app_name="engine-probe", cpus=3, **kw)
+out = {"conf": [spark.conf.get(k, None) for k in (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum")]}
+
+if not kw:
+    src = tempfile.mkdtemp()
+    events = spark.range(200).selectExpr(
+        "id AS event_id", "id % 7 AS user_id", "timestamp_seconds(id) AS ts")
+    events.write.mode("overwrite").parquet(src)
+
+    def step(st, pdf):
+        st["n"] += len(pdf)
+        res = pdf[["event_id"]].copy()
+        res["n"] = st["n"]
+        return res
+
+    live = (LiveStream(spark.readStream.schema(events.schema).parquet(src))
+            .by("user_id")
+            .scan_state({"n": 0}, step, "user_id long, event_id long, n long"))
+    q = (live.df.writeStream.format("memory").queryName("probe")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination()
+    out["state_instances"] = [
+        p["stateOperators"][0]["numStateStoreInstances"]
+        for p in q.recentProgress if p["numInputRows"] > 0]
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        spark.read.parquet(src).groupBy("user_id").count().explain()
+    out["batch_exchanges"] = [l.strip() for l in buf.getvalue().splitlines()
+                              if "hashpartitioning" in l]
+    shutil.rmtree(src)
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def _probe(**kw) -> dict:
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run([sys.executable, "-c", _PROBE, json.dumps(kw)],
+                          cwd=ROOT, env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_live_gets_one_state_partition_per_core_batch_keeps_32():
+    """Default session on 3 cores: a live stateful query runs 3
+    state-store partitions (streaming has no AQE, and each partition is
+    a task per micro-batch), while a batch Exchange still starts at 32
+    partitions for AQE to coalesce."""
+    got = _probe()
+    assert got["conf"] == ["3", "32"]
+    assert got["state_instances"] == [3]
+    assert got["batch_exchanges"], got
+    assert all(", 32)" in l for l in got["batch_exchanges"]), got
+
+
+def test_explicit_shuffle_partitions_sets_only_that():
+    assert _probe(shuffle_partitions=5)["conf"] == ["5", None]

@@ -2345,3 +2345,69 @@ def test_election_idle_ttl_purge_and_reemergence(spark, tmp_path, op):
         # so the re-emerged key elects doc 6 beyond its lifetime cap
         assert exact == {"a": {1, 8}, "b": {2, 3}}
         assert ttl == {"a": {1, 8, 6}, "b": {2, 3}}
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, batch_events,
+                                                    tmp_path):
+    """A checkpoint keeps the state-store partition count it started
+    with: Spark restores ``spark.sql.shuffle.partitions`` from the
+    offset log, so a scan_state query begun under 8 partitions resumes
+    under a session set to 2 with all 8 stores and its per-key state
+    intact — checkpoints written before the per-core default still
+    resume, and their output still equals the batch scan."""
+    import importlib
+    import os
+    from scespet_spark.streaming.live import LiveStream
+
+    def step(st, pdf):
+        import numpy as np
+        run = st["acc"] + np.cumsum(
+            np.round(pdf["value"].to_numpy(dtype="float64") * 100))
+        st["acc"] = float(run[-1])
+        out = pdf[["event_id", "ts"]].copy()
+        out["running_total"] = run / 100.0
+        return out
+
+    drops, stage = tmp_path / "drops", tmp_path / "stage"
+    stage.mkdir()
+    cut = batch_events.approxQuantile("event_id", [0.5], 0.0)[0]
+    for i, cond in enumerate([F.col("event_id") <= cut,
+                              F.col("event_id") > cut]):
+        batch_events.filter(cond).coalesce(1).write.parquet(
+            str(drops / f"d{i}"))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def drain(drop):
+        part = next(p for p in os.listdir(drops / f"d{drop}")
+                    if p.endswith(".parquet"))
+        os.symlink(str(drops / f"d{drop}" / part),
+                   str(stage / f"drop-{drop}.parquet"))
+        src = (spark.readStream.schema(batch_events.schema)
+               .option("maxFilesPerTrigger", 1).parquet(str(stage)))
+        live = (LiveStream(src).by("user_id")
+                .scan_state({"acc": 0.0}, step,
+                            "user_id long, event_id long, ts timestamp, "
+                            "running_total double"))
+        q = (live.df.writeStream.format("parquet").option("path", out)
+             .option("checkpointLocation", ckpt).outputMode("append")
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        return [p["stateOperators"][0]["numStateStoreInstances"]
+                for p in q.recentProgress if p["numInputRows"] > 0]
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        first = drain(0)
+        spark.conf.set(key, "2")
+        resumed = drain(1)
+    finally:
+        spark.conf.set(key, old)
+    assert (first, resumed) == ([8], [8])
+
+    cols = ["event_id", "ts", "user_id", "running_total"]
+    want = importlib.import_module("__spark_entry__").queries()[
+        "scan_running_sum"](spark, SF)
+    assert (_sorted_rows(spark.read.parquet(out), cols)
+            == _sorted_rows(want, cols))
