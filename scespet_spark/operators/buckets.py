@@ -89,8 +89,11 @@ def collapse(grouped: GroupedStream, bucket_factory, schema,
     silently split into separate cycles, and NaN != NaN would split
     every row (validated: a decreasing or NaN cycle value raises).
 
-    Execution shape: hash-repartition on (keys, bucket) — the same
-    shuffle the previous applyInPandas form paid — then sort within
+    Execution shape: hash-repartition on (keys, bucket) into
+    ``defaultParallelism`` partitions — the same shuffle the previous
+    applyInPandas form paid; the explicit count keeps AQE from
+    coalescing it to one task, which would run every key's Python fold
+    serially — then sort within
     partitions by (keys, bucket, t, seq) and stream the sorted rows
     through ``mapInPandas``.  Bucket/cycle boundaries are found with
     numpy on each Arrow batch; the open bucket object and the final
@@ -193,6 +196,7 @@ def collapse(grouped: GroupedStream, bucket_factory, schema,
         if out:
             yield pd.DataFrame(out)
 
-    return (s.df.repartition(*gcols)
+    n = s.df.sparkSession.sparkContext.defaultParallelism
+    return (s.df.repartition(n, *gcols)
             .sortWithinPartitions(*gcols, t, seq)
             .mapInPandas(run_partition, schema))

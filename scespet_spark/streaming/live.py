@@ -40,13 +40,14 @@ def read_table_stream(spark: SparkSession, sf_dir: str, table: str,
                       max_files_per_trigger: int = 1) -> DataFrame:
     """Any driver parquet table as a file-streaming source — the live
     ingest path for the pipeline operators (a crawl landing as parquet
-    drops IS a file stream).  Schema is taken from a batch read;
+    drops IS a file stream).  Schema is the batch read's, inferred once
+    per listing (``sources.batch.parquet_schema``);
     TIMESTAMP(NANOS) columns arrive as long under ``nanosAsLong`` and
     are truncated to micros exactly like batch."""
-    from ..sources.batch import ensure_nanos_conf
+    from ..sources.batch import ensure_nanos_conf, parquet_schema
     ensure_nanos_conf(spark)
     path = f"{sf_dir}/{table}.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     # the streaming file source requires a *directory*; the driver ships
     # single parquet files, so stage a symlink dir (no data copy)
     import os

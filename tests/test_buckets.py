@@ -86,6 +86,18 @@ def test_collapse_per_key_isolation(spark):
         ("x", 1, 1), ("y", 2, 30)]
 
 
+def test_collapse_repartitions_to_default_parallelism(spark):
+    # a column-only repartition is coalesced by AQE to one task for a
+    # small shuffle; the fixed count keeps the Python fold on every core
+    s = _keyed(spark, [("x", 1, 0, 1), ("y", 1, 1, 10)])
+    df = collapse(s.group(Termination()), make_probe(), SCHEMA, emit="last")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n = spark.sparkContext.defaultParallelism
+    exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+    assert len(exchanges) == 1, plan
+    assert f", {n}), REPARTITION_BY_NUM" in exchanges[0], plan
+
+
 def test_trigger_stream_slice_alignment(spark):
     # slice [1,2,3,4]@t0..3 by an external trigger firing at t=2
     # (reference: MacroTerm as slice spec, SliceTriggerSpec.scala:57-73;

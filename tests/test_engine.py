@@ -22,6 +22,23 @@ out = {"conf": [spark.conf.get(k, None) for k in (
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum")]}
 
 if not kw:
+    # a working set of 150 distinct generated classes, run twice: the
+    # second round must hit the codegen cache for every class.  The
+    # codegen explain compiles each plan's class without running a job.
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    rounds = []
+    for _ in range(2):
+        before = compiles.getCount()
+        with contextlib.redirect_stdout(io.StringIO()):
+            for i in range(150):
+                spark.range(1).selectExpr(
+                    f"id * {i + 2} + {i} AS x").explain("codegen")
+        rounds.append(compiles.getCount() - before)
+    out["codegen_cache"] = spark.conf.get(
+        "spark.sql.codegen.cache.maxEntries")
+    out["codegen_compiles"] = rounds
+
     src = tempfile.mkdtemp()
     events = spark.range(200).selectExpr(
         "id AS event_id", "id % 7 AS user_id", "timestamp_seconds(id) AS ts")
@@ -68,9 +85,15 @@ def test_live_gets_one_state_partition_per_core_batch_keeps_32():
     """Default session on 3 cores: a live stateful query runs 3
     state-store partitions (streaming has no AQE, and each partition is
     a task per micro-batch), while a batch Exchange still starts at 32
-    partitions for AQE to coalesce."""
+    partitions for AQE to coalesce.  The codegen cache outgrows the
+    stock 100 classes: a 150-class working set run twice compiles
+    nothing the second time."""
     got = _probe()
     assert got["conf"] == ["3", "32"]
+    assert got["codegen_cache"] == "1000"
+    first, second = got["codegen_compiles"]
+    assert first >= 150, got
+    assert second == 0, got
     assert got["state_instances"] == [3]
     assert got["batch_exchanges"], got
     assert all(", 32)" in l for l in got["batch_exchanges"]), got

@@ -6,7 +6,12 @@ dump .explain('formatted') to a file.
 Usage:
   python tools/time_query.py [--sf DIR] [--n N] [--explain-dir DIR] q1 q2 ...
 
-Prints one line per query: name, min, all samples.
+Each sample is timed in two phases: *build* (the call that constructs
+the DataFrame, with any model fits and censuses it runs) and *exec* (the
+noop-sink write).  Prints one line per query: name, min total seconds,
+then per sample the build and exec seconds, the Spark jobs each phase
+started and the classes codegen compiled during the sample.  A warm
+session that re-runs a query should compile nothing.
 """
 
 from __future__ import annotations
@@ -48,18 +53,27 @@ def main():
             "overwrite").save()
 
     from scespet_spark.operators import dedup, similarity, text
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
     for name in args.names:
         samples = []
-        njobs = 0
         for i in range(args.n):
-            spark.sparkContext.setJobGroup(f"timeq-{name}-{i}",
-                                           f"timeq: {name}")
+            group = f"timeq-{name}-{i}"
+            c0 = compiles.getCount()
+            sc.setJobGroup(f"{group}:build", f"timeq: {name}")
             t0 = time.time()
             df = queries[name](spark, args.sf)
+            t1 = time.time()
+            sc.setJobGroup(f"{group}:exec", f"timeq: {name}")
             df.write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            tracker = spark.sparkContext.statusTracker()
-            njobs = len(tracker.getJobIdsForGroup(f"timeq-{name}-{i}"))
+            t2 = time.time()
+            samples.append({
+                "build": round(t1 - t0, 3), "exec": round(t2 - t1, 3),
+                "build_jobs": len(tracker.getJobIdsForGroup(f"{group}:build")),
+                "exec_jobs": len(tracker.getJobIdsForGroup(f"{group}:exec")),
+                "compiles": compiles.getCount() - c0})
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             df = queries[name](spark, args.sf)
@@ -70,8 +84,9 @@ def main():
         dedup.release_cached()
         similarity.release_cached()
         text.release_cached()
-        print(f"{name}: min={min(samples):.3f}  jobs={njobs}  "
-              f"samples={[round(s, 3) for s in samples]}", flush=True)
+        total = min(x["build"] + x["exec"] for x in samples)
+        print(f"{name}: min={total:.3f}  " + "  ".join(
+            f"{k}={[x[k] for x in samples]}" for k in samples[0]), flush=True)
 
 
 if __name__ == "__main__":
