@@ -9,16 +9,25 @@ def spark():
     # fewer shuffle partitions (fewer state stores per streaming
     # micro-batch, fewer tiny tasks) and no AQE re-optimization rounds
     # cut per-job latency — measured on test_streaming: 465s (8, AQE)
-    # -> 360s (2, no AQE), all tests green.  Constraint propagation
-    # stays on as in production: the plan tests assert the inferred
-    # IsNotNull filters it pushes into scans.  Bench/production
-    # sessions keep engine.get_spark defaults (AQE on, batch Exchanges
-    # from max(32, 2x cores) partitions, one live state partition per
-    # core); nothing here changes what any test asserts.
-    s = get_spark(app_name="scespet-spark-tests", cpus=8,
+    # -> 360s (2, no AQE), all tests green.  Two task slots match the
+    # two shuffle partitions: a local[8] session on a 4-core box ran 8
+    # tasks (and 8 Python workers) per stage of a default-parallelism
+    # input, and constraint propagation re-derives every plan's
+    # constraints at each optimizer pass.  Measured on 8 heavy tests
+    # across five files (4 cores): 203s (local[8]) -> 140s (local[2])
+    # -> 124s (local[2], no constraint propagation).  The plan tests
+    # switch constraint propagation back on (test_plans.py), since they
+    # assert the inferred IsNotNull filters it pushes into scans.
+    # Bench/production sessions keep engine.get_spark defaults (AQE
+    # on, batch Exchanges from max(32, 2x cores) partitions, one live
+    # state partition per core); nothing here changes what any test
+    # asserts.
+    s = get_spark(app_name="scespet-spark-tests", cpus=2,
                   shuffle_partitions=2,
                   extra_conf={"spark.sql.adaptive.enabled": "false",
-                              "spark.sql.codegen.wholeStage": "false"})
+                              "spark.sql.codegen.wholeStage": "false",
+                              "spark.sql.constraintPropagation.enabled":
+                                  "false"})
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -29,6 +29,21 @@ def entry():
     return importlib.import_module("__spark_entry__")
 
 
+@pytest.fixture(autouse=True)
+def _production_constraint_propagation(spark):
+    """Plans here are asserted under the optimizer production sessions
+    run: ``engine.get_spark`` leaves constraint propagation on (it
+    infers the IsNotNull filters pushed into scans), while the shared
+    test session turns it off for speed (conftest.py)."""
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_no_cartesian_no_row_python_anywhere(spark, all_query_dfs):
     """Every declared query plans without CartesianProduct (quadratic
     shuffle — fatal at scale) and without BatchEvalPython (row-at-a-time
