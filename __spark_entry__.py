@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scespet_spark import AFTER, BEFORE, Count, Every, Stream, Trigger
+from scespet_spark.operators._driver import local_frame
 from scespet_spark.sources.batch import events_stream, load_table
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -4234,7 +4235,8 @@ def ann_opq_adc_topk(spark, sf_dir):
     top50 = {r.vec_id
              for r in brute_force_topk(emb, qvec, k=50).collect()}
     corpus_ids = emb.select("vec_id")
-    res = spark.createDataFrame(
+    res = local_frame(
+        spark,
         [(i + 1, int(r.vec_id), float(r.score),
           bool(r.vec_id in top50))
          for i, r in enumerate(got)],
@@ -4376,7 +4378,8 @@ def ann_pca_ivfpq_topk(spark, sf_dir):
              for r in brute_force_topk(emb, qvec, k=50).collect()}
     got = rer.collect()                       # k rows — model-sized
     corpus_ids = emb.select("vec_id")
-    res = spark.createDataFrame(
+    res = local_frame(
+        spark,
         [(i + 1, int(r.vec_id), float(r.score),
           bool(r.vec_id in top50))
          for i, r in enumerate(got)],
@@ -6954,7 +6957,8 @@ def bpe_fit_merges(spark, sf_dir):
     words = [r["word"] for r in word_frequencies(docs).collect()]
     toks = [(lft + rgt).replace(EOW, "") for _, lft, rgt in rows]
     grounded = all(any(t in w for w in words) for t in toks if t)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(ranks_ok, derivable, grounded, len(rows) <= 64)],
         "ranks_contiguous boolean, parts_derivable boolean, "
         "pairs_in_corpus boolean, n_le_target boolean")
@@ -7804,7 +7808,8 @@ def unigram_fit_pieces(spark, sf_dir):
     covered = corpus_chars <= vocab
     negative = all(float(r["logprob"]) < 0 for r in pieces)
     multi = any(len(r["piece"]) > 1 for r in pieces)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(covered, negative, multi)],
         "chars_covered boolean, logps_negative boolean, "
         "has_multi_char boolean")

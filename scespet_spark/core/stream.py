@@ -29,6 +29,7 @@ from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 
+from ..operators._driver import local_frame
 from . import ordering
 
 BEFORE = "BEFORE"
@@ -974,7 +975,7 @@ def _keymap_bind(left: Stream, right: Stream, key_map):
         spark = left.df.sparkSession
         lk_type = left.df.schema[lk].dataType.simpleString()
         rk_type = right.df.schema[rk].dataType.simpleString()
-        mdf = spark.createDataFrame(pairs, f"{lk} {lk_type}, __jk {rk_type}")
+        mdf = local_frame(spark, pairs, f"{lk} {lk_type}, __jk {rk_type}")
         lmapped = left.df.join(F.broadcast(mdf), lk, "left")
     if lk != rk and lk in right.df.columns:
         raise ValueError(f"right stream already has a column named '{lk}'; "

@@ -66,6 +66,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ._driver import local_frame
 from ._staging import stage as _stage
 
 #: independent seed column for the second hash (any fixed constant;
@@ -257,7 +258,7 @@ def bloom_attach(df: DataFrame, bloom: dict, col: Column | str,
             raise ValueError(
                 f"dense word list has {len(words)} words, m={m_bits} "
                 f"needs {m_bits // 64}")
-        row = spark.createDataFrame([(words,)], "__bloom array<bigint>")
+        row = local_frame(spark, [(words,)], "__bloom array<bigint>")
     row = row.withColumn("__bj", F.lit(1))
     out = (df.withColumn("__bj", F.lit(1))
            .join(F.broadcast(row), "__bj")

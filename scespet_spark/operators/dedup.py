@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ._driver import local_frame
 from ._staging import stage as _stage
 
 from .hashing import h64, h64hi
@@ -62,13 +63,20 @@ def _spread(df: DataFrame) -> DataFrame:
     round-robin repartition with an *explicit* count (AQE never
     re-coalesces user-specified repartition(n)) costs one small shuffle
     of (id, text) and buys back the whole stage's parallelism; skipped
-    when the scan is already parallel (the 100TB case)."""
+    when the scan is already parallel (the 100TB case).
+
+    A shuffled input is always spread: its partition count is known
+    only once AQE has run its shuffle stages, so asking ``.rdd`` would
+    start a job at build time.  The physical plan, which shows the
+    Exchanges (``sparkPlan`` precedes their insertion), is planned
+    without running anything."""
     if df.isStreaming:
         # micro-batches inherit the source's parallelism, and .rdd is
         # illegal on a streaming plan — the spread is a batch-only fix
         return df
     n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
+    if ("Exchange" in df._jdf.queryExecution().executedPlan().toString()
+            or df.rdd.getNumPartitions() < n):
         return df.repartition(n)
     return df
 
@@ -1776,7 +1784,8 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
             rows = [(n, lab[r]) for n, r in sorted(roots.items())]
             if has_null:
                 rows.append((None, None))
-            return pairs.sparkSession.createDataFrame(
+            return local_frame(
+                pairs.sparkSession,
                 rows,
                 StructType([StructField("id", ntype),
                             StructField("cluster", ntype)]))
@@ -1994,7 +2003,8 @@ def incremental_components(prior_labels: DataFrame, new_pairs: DataFrame,
             lab[r] = min(lab.get(r, n), n)
         from pyspark.sql.types import StructField, StructType
         ntype = sup.schema["sa"].dataType
-        mapping = new_pairs.sparkSession.createDataFrame(
+        mapping = local_frame(
+            new_pairs.sparkSession,
             [(n, lab[r]) for n, r in roots.items()],
             StructType([StructField("__node", ntype),
                         StructField("__root", ntype)]))

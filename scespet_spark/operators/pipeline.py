@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ._driver import local_frame
 from ._staging import stage as _stage
 from pyspark.sql.functions import pandas_udf
 
@@ -200,7 +201,7 @@ def dsir_model(raw: DataFrame, target: DataFrame,
             for b in sorted(set(ct) | set(cr))]
     rows.append((-2, math.log(alpha / (tt + aB))
                  - math.log(alpha / (tr + aB))))
-    return raw.sparkSession.createDataFrame(rows, "bucket long, w double")
+    return local_frame(raw.sparkSession, rows, "bucket long, w double")
 
 
 def dsir_apply(df: DataFrame, model: DataFrame, text_col: str = "text",
@@ -398,7 +399,8 @@ def gate_funnel(df: DataFrame, stages: list[str],
     # order by PIPELINE position, as documented — orderBy("stage")
     # would return gates alphabetically (masked whenever the stage
     # list happens to be alphabetical, as the r10 demo's was)
-    return (df.sparkSession.createDataFrame(
+    return (local_frame(
+        df.sparkSession,
         [(i, *r) for i, r in enumerate(out)],
         "__idx long, stage string, n_dropped long, survivors_after long")
         .orderBy("__idx").drop("__idx"))
@@ -792,8 +794,7 @@ def exact_quantiles(df: DataFrame, value_col: str, qs: list[float],
         # here keeps the "<= threshold rows leave the executors" bound
         # (falling through would TakeOrdered up to n rows)
         out = [(float(q), float(mn)) for q in sorted(qs)]
-        return df.sparkSession.createDataFrame(
-            out, "q double, value double")
+        return local_frame(df.sparkSession, out, "q double, value double")
 
     def widths(k):
         # uniform level widths: level j splits the range by buckets^j
@@ -935,7 +936,7 @@ def exact_quantiles(df: DataFrame, value_col: str, qs: list[float],
             for q in want.get(key, ()):
                 resolved[q] = float(row["__v"])
     out = [(float(q), float(resolved[q])) for q in sorted(qs)]
-    return df.sparkSession.createDataFrame(out, "q double, value double")
+    return local_frame(df.sparkSession, out, "q double, value double")
 
 
 def _select_rank(base: DataFrame, r: int, buckets: int,
@@ -1077,7 +1078,8 @@ def exact_quantiles_by(df: DataFrame, value_col: str, qs: list[float],
                       row["mn"], row["mx"])
 
     spark = df.sparkSession
-    gstats = spark.createDataFrame(
+    gstats = local_frame(
+        spark,
         [(r["__g"], r["mn"], r["mx"]) for r in grows],
         StructType([base.schema["__g"],
                     StructField("__mn", DoubleType()),
@@ -1214,7 +1216,8 @@ def exact_quantiles_by(df: DataFrame, value_col: str, qs: list[float],
     out = [(g, float(q), float(val))
            for (g, q), val in sorted(resolved.items(),
                                      key=lambda t: (str(t[0][0]), t[0][1]))]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out, StructType([df.schema[by],
                          StructField("q", DoubleType()),
                          StructField("value", DoubleType())]))

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ._driver import fitted_rows, local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -136,8 +138,8 @@ def _whale_keys(counted, key: str, cap: int | None,
     building a 10k-literal plan or silently un-bounding the tail."""
     if not cap or cap <= 0 or streaming:
         return []
-    head = (counted.filter(F.col("__n") > cap).select(key)
-            .limit(10_001).collect())
+    head = fitted_rows(counted.filter(F.col("__n") > cap).select(key)
+                       .limit(10_001))
     if len(head) > 10_000:
         raise ValueError(
             f"more than 10000 blocking groups exceed whale_rows={cap}: "
@@ -258,8 +260,8 @@ def ivf_assign(df: DataFrame, centroids: DataFrame,
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    rows = centroids.select(F.col(label_col).alias("c"),
-                            F.col("centroid")).collect()
+    rows = fitted_rows(centroids.select(F.col(label_col).alias("c"),
+                                        F.col("centroid")))
     rows.sort(key=lambda r: r.c)  # ascending: np.argmax's first-max = min cell
     if not rows:
         raise ValueError("ivf_assign: centroids table is empty")
@@ -870,7 +872,8 @@ def pq_train(df: DataFrame, m: int = 8, dsub: int = 8, ksub: int = 16,
     in-memory re-rankable codes."""
     codes, cent_list = _pq_train_model(df, m, dsub, ksub, iters,
                                        id_col, vec_col)
-    cents = df.sparkSession.createDataFrame(
+    cents = local_frame(
+        df.sparkSession,
         [(j, int(c), cent_list[j][c]) for j in range(m)
          for c in sorted(cent_list[j])],
         "sub long, code long, c array<double>")
@@ -950,8 +953,8 @@ def _adc_serve(df: DataFrame, codes: DataFrame,
                 dlt = qp[d] - cv[d]
                 acc = acc + dlt * dlt
             lut_rows.append((j, int(c), int(math.floor(acc * 1e6 + 0.5))))
-    lut = df.sparkSession.createDataFrame(
-        lut_rows, "sub long, code long, md long")
+    lut = local_frame(df.sparkSession, lut_rows,
+                      "sub long, code long, md long")
     if members is not None:
         # IVF restriction: ADC only the probed cells' codes (codebooks
         # stay corpus-wide — the offline artifact).  At 100 TB the codes
@@ -1184,7 +1187,8 @@ def _opq_train_model(df: DataFrame, m: int, dsub: int, ksub: int,
 
     # --- final: pinned PQ training in the rotated space ---
     spark = df.sparkSession
-    rot_model = spark.createDataFrame(
+    rot_model = local_frame(
+        spark,
         [(-1, [0.0] * d, 0.0)]
         + [(i, R[i].tolist(), 1.0) for i in range(d)],
         "idx int, w array<double>, eigval double")
@@ -1218,7 +1222,8 @@ def opq_train(df: DataFrame, m: int = 8, dsub: int = 8, ksub: int = 16,
     R from partition-ordered partials + numpy SVD)."""
     codes, cent_list, _R, rot_model = _opq_train_model(
         df, m, dsub, ksub, iters, pq_iters, id_col, vec_col)
-    cents = df.sparkSession.createDataFrame(
+    cents = local_frame(
+        df.sparkSession,
         [(j, int(c), cent_list[j][c]) for j in range(m)
          for c in sorted(cent_list[j])],
         "sub long, code long, c array<double>")
@@ -1308,7 +1313,8 @@ def identity_rotation(spark, d: int) -> DataFrame:
     """The identity rotation as a ``pca_project``-shaped model table
     (zero mean row + one unit row per dim) — what a plain-PQ index
     pins so PQ and OPQ share one rotated serving/encode path."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(-1, [0.0] * d, 0.0)]
         + [(i, [1.0 if j == i else 0.0 for j in range(d)], 1.0)
            for i in range(d)],
@@ -1414,7 +1420,8 @@ def pq_index_batch_topk(df: DataFrame, codes: DataFrame,
         return pd.Series(list(out))
 
     spark = df.sparkSession
-    pos_df = spark.createDataFrame(
+    pos_df = local_frame(
+        spark,
         [(p, j, int(c)) for p, (j, c) in enumerate(positions)],
         "pos int, sub long, code long")
     qv = F.col(q_vec).cast("array<double>")
@@ -1678,16 +1685,14 @@ def pca_fit(df: DataFrame, vec_col: str = "embedding",
     order = np.argsort(vals)[::-1]
     if k is not None:
         order = order[:k]
-    model = [{"idx": -1, "w": mean.tolist(), "eigval": 0.0}]
+    model = [(-1, mean.tolist(), 0.0)]
     for rank, j in enumerate(order):
         v = vecs[:, j]
         if v[int(np.argmax(np.abs(v)))] < 0:  # sign convention
             v = -v
-        model.append({"idx": rank, "w": v.tolist(),
-                      "eigval": float(vals[j])})
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        pd.DataFrame(model), "idx int, w array<double>, eigval double")
+        model.append((rank, v.tolist(), float(vals[j])))
+    return local_frame(df.sparkSession, model,
+                       "idx int, w array<double>, eigval double")
 
 
 def pca_project(df: DataFrame, model: DataFrame, k: int | None = None,

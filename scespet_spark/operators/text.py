@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ._driver import fitted_rows, local_frame
 from ._staging import stage as _stage
 
 from .hashing import h64
@@ -1594,7 +1595,7 @@ def quality_classifier_apply_rowwise(df: DataFrame, model: DataFrame,
     shuffle-order float summation; parity-tested to 1e-6).  Zero-token
     docs score NULL here instead of dropping (a map stage cannot drop
     its row) — a ``pred == 1`` gate treats both the same."""
-    rows = {r["bucket"]: r["w"] for r in model.collect()}
+    rows = {r["bucket"]: r["w"] for r in fitted_rows(model)}
     if -1 not in rows or -2 not in rows:
         raise ValueError(
             "model table lacks the reserved bias (-1) / unseen (-2) "
@@ -1709,7 +1710,7 @@ def lang_id_apply(df: DataFrame, model: DataFrame, n: int = 3,
     # ONE collect of the <= (B+2)*L-row model: three lazy reads (two
     # scalar filters + a pivot) would re-run the whole fit DAG three
     # times when the model is an unmaterialized expression
-    rows = model.collect()
+    rows = fitted_rows(model)
     pr = {r["lang"]: r["w"] for r in rows if r["bucket"] == -1}
     un = {r["lang"]: r["w"] for r in rows if r["bucket"] == -2}
     if not pr or set(pr) != set(un):
@@ -1721,7 +1722,8 @@ def lang_id_apply(df: DataFrame, model: DataFrame, n: int = 3,
     for r in rows:
         if r["bucket"] >= 0:
             by_bucket.setdefault(r["bucket"], {})[r["lang"]] = r["w"]
-    wide = model.sparkSession.createDataFrame(
+    wide = local_frame(
+        model.sparkSession,
         [(b, *[ws.get(l) for l in langs])
          for b, ws in sorted(by_bucket.items())],
         "bucket long, " + ", ".join(f"`{l}` double" for l in langs))
@@ -1773,7 +1775,7 @@ def lang_id_apply_rowwise(df: DataFrame, model: DataFrame, n: int = 3,
     get NULL ``out``/``score`` here instead of dropping (a map stage
     cannot drop its row) — a lang-equality gate treats both the same.
     ``hash_fn`` must match the fit (production: ``F.xxhash64``)."""
-    rows = model.collect()
+    rows = fitted_rows(model)
     pr = {r["lang"]: r["w"] for r in rows if r["bucket"] == -1}
     un = {r["lang"]: r["w"] for r in rows if r["bucket"] == -2}
     if not pr or set(pr) != set(un):
@@ -1901,7 +1903,7 @@ def quality_classifier_apply(df: DataFrame, model: DataFrame,
     LM apply makes because a streaming plan cannot cross-join.  Zero
     corpus passes at serve time."""
     scal = {r["bucket"]: r["w"]
-            for r in model.filter(F.col("bucket") < 0).collect()}
+            for r in fitted_rows(model.filter(F.col("bucket") < 0))}
     if -1 not in scal or -2 not in scal:
         raise ValueError(
             "model table lacks the reserved bias (-1) / unseen (-2) "

@@ -28,6 +28,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ._driver import fitted_rows, local_frame
 from ._staging import stage as _stage
 
 from .text import tokens
@@ -92,7 +93,7 @@ def bpe_fit(df: DataFrame, n_merges: int, text_col: str = "text",
         # distributed TakeOrdered (sort+limit -> no global sort barrier)
         wf = wf.orderBy(F.col("freq").desc(), F.col("word")) \
                .limit(max_vocab)
-    wf = wf.collect()
+    wf = fitted_rows(wf)
     # driver-side state: word -> (symbol tuple, freq)
     words = {r["word"]: [tuple(r["word"]) + (EOW,), int(r["freq"])]
              for r in wf}
@@ -126,8 +127,8 @@ def bpe_fit(df: DataFrame, n_merges: int, text_col: str = "text",
                 pair_words[(a, b)].add(w)
         pair_freq = defaultdict(int, {p: f for p, f in pair_freq.items()
                                       if f > 0})
-    return df.sparkSession.createDataFrame(
-        merges, "rank long, left string, right string")
+    return local_frame(df.sparkSession, merges,
+                       "rank long, left string, right string")
 
 
 def bpe_apply(df: DataFrame, merges: DataFrame, text_col: str = "text",
@@ -373,8 +374,8 @@ def unigram_fit(df: DataFrame, vocab_size: int, text_col: str = "text",
         if it >= em_iters:
             break
     rows = sorted(logp.items())
-    return df.sparkSession.createDataFrame(
-        rows, "piece string, logprob double")
+    return local_frame(df.sparkSession, rows,
+                       "piece string, logprob double")
 
 
 def unigram_apply(df: DataFrame, pieces: DataFrame,

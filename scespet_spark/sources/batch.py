@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructType
 
 from ..core.stream import Stream
+from ..operators._driver import local_frame
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -75,20 +76,31 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema ``spark.read.parquet(path)`` infers, inferred once per
-    listing of ``path`` (see the module docstring).  A path the
-    filesystem cannot summarize (a missing table) is read as is, so the
-    caller gets Spark's own error."""
+def path_fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """What a listing of ``path`` saw: its content summary (files,
+    directories, bytes) and modification time, read through the Hadoop
+    ``FileSystem`` a read of ``path`` uses; ``None`` for a path the
+    filesystem cannot summarize (a missing table)."""
     from ..operators.snapshot import _hadoop_fs
     fs, jpath = _hadoop_fs(spark, path)
     try:
         summary = fs.getContentSummary(jpath)
     except Py4JJavaError:
+        return None
+    return (summary.getFileCount(), summary.getDirectoryCount(),
+            summary.getLength(),
+            fs.getFileStatus(jpath).getModificationTime())
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    listing of ``path`` (see the module docstring).  A path the
+    filesystem cannot summarize (a missing table) is read as is, so the
+    caller gets Spark's own error."""
+    listing = path_fingerprint(spark, path)
+    if listing is None:
         return spark.read.parquet(path).schema
-    fingerprint = (summary.getFileCount(), summary.getDirectoryCount(),
-                   summary.getLength(),
-                   fs.getFileStatus(jpath).getModificationTime(),
+    fingerprint = (*listing,
                    *(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
     hit = _SCHEMAS.get(path)
     if hit is None or hit[0] != fingerprint:
@@ -244,9 +256,9 @@ def as_vector(spark: SparkSession, keys, key_col: str = "key",
     (reference: asVector, EnvTermBuilder.scala:59-62).  All cells
     initialise at t=0."""
     rows = [(k, 0, i) for i, k in enumerate(keys)]
-    df = spark.createDataFrame(rows, f"{key_col} string, __t long, {seq} long") \
+    df = local_frame(spark, rows, f"{key_col} string, __t long, {seq} long") \
         if all(isinstance(k, str) for k in keys) else \
-        spark.createDataFrame(rows, f"{key_col} long, __t long, {seq} long")
+        local_frame(spark, rows, f"{key_col} long, __t long, {seq} long")
     df = df.select(F.col("__t").cast("timestamp").alias(t), seq, key_col)
     return Stream(df, t=t, seq=seq, keys=(key_col,))
 
@@ -296,8 +308,8 @@ def planted_embeddings(spark: SparkSession, n: int = 2000, dim: int = 64,
     X /= np.linalg.norm(X, axis=1, keepdims=True)
     rows = [(int(i), [float(x) for x in X[i]], int(lab[i]))
             for i in range(n)]
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int")
+    return local_frame(spark, rows,
+                       "vec_id long, embedding array<double>, label int")
 
 
 def show(stream: Stream, n: int = 20, prefix: str = "") -> None:

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType
 
+from ..operators._driver import local_frame
+
 
 def read_table_stream(spark: SparkSession, sf_dir: str, table: str,
                       max_files_per_trigger: int = 1) -> DataFrame:
@@ -827,7 +829,7 @@ def keymap_latest(left: DataFrame, right: DataFrame, lk: str, rk: str,
         spark = left.sparkSession
         lk_type = left.schema[lk].dataType.simpleString()
         rk_type = right.schema[rk].dataType.simpleString()
-        mdf = spark.createDataFrame(pairs, f"{lk} {lk_type}, __jk {rk_type}")
+        mdf = local_frame(spark, pairs, f"{lk} {lk_type}, __jk {rk_type}")
         lmapped = left.join(F.broadcast(mdf), lk, "left")
 
     otypes = {c: left.schema[c].dataType for c in left_cols}
