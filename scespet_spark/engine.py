@@ -35,6 +35,11 @@ setting here is chosen to also make sense on a large cluster:
   compiled, never a plan or a row.  It is a static conf and the cache
   is JVM-global: the first session in a JVM that generates code sizes
   it for the life of that JVM.
+- No PySpark call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+  every ``functions.*`` and ``Column`` call walks the Python stack and
+  makes extra py4j round trips only to record its Python file and line
+  for a runtime error's ``== DataFrame ==`` section.
 """
 
 from __future__ import annotations
@@ -72,7 +77,21 @@ def get_spark(
     benchmark passes), so a long-lived session re-running its plans
     compiles them once.  The conf is static and the cache JVM-global, so
     it is set here with the builder: a session created later in the
-    same JVM keeps the size the first one fixed."""
+    same JVM keeps the size the first one fixed.
+
+    PySpark's call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``).  On, it
+    costs every ``functions.*`` or ``Column`` call a Python stack walk
+    and about five py4j round trips: building 2000
+    ``(F.col(c) + F.lit(i)).alias(a)`` expressions took 5.4-6.5 s with
+    it and 1.6-1.9 s without (4 cores), and query builds make thousands
+    of such calls.  Errors keep their class and message; only the
+    ``== DataFrame ==`` section of a runtime error (say
+    ``DIVIDE_BY_ZERO`` under ANSI) names a JVM frame instead of the
+    Python file and line that built the failing expression.  Pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    "true"}`` to get the Python call site back.  PySpark reads the
+    setting once per Python process, from the first active session."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -110,6 +129,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Spark has no TIMESTAMP(NANOS) type; read ns columns as long and
         # normalize in sources.batch.load_table (truncate to micros, same
         # as DuckDB's ns->us behavior, keeping oracle parity).

@@ -1,7 +1,7 @@
 """Shared per-family registry for operator-persisted DataFrames.
 
-Operators that persist intermediates across multiple actions (LSH
-signature tables, Lloyd's training points) register them under a family
+Operators that persist intermediates across multiple actions (shingle
+sets, Lloyd's training points) register them under a family
 name; long-lived callers release a family once its downstream results
 are materialized.  One registry — not one copy-pasted list per module —
 so adding an operator family never adds a new cache-management API.

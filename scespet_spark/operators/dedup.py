@@ -965,7 +965,7 @@ def winnow_overlap_pairs(df: DataFrame, min_shared: int = 2,
     # the fingerprint pipeline (per-token md5 + positional shingles +
     # window-min) feeds the rare filter AND both self-join sides —
     # persist so it runs once, not ~3x (same shape as
-    # lsh_candidate_pairs / ngram_jaccard_pairs)
+    # ngram_jaccard_pairs)
     from ._cache import persist
     fp = persist(fp, "dedup")
     rare = (fp.groupBy("fingerprint")
@@ -1007,7 +1007,7 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
 
 def release_cached() -> int:
     """Unpersist tables cached by the dedup family
-    (``lsh_candidate_pairs`` signatures, ``winnow_overlap_pairs``
+    (``winnow_overlap_pairs`` fingerprints, ``ngram_jaccard_pairs``
     shingle sets, ``incremental_components`` touched-prior rows).
     Call after downstream results have been materialized; returns how
     many tables were released."""
@@ -1157,31 +1157,35 @@ def incremental_near_dup(new: DataFrame, prior: DataFrame | None = None,
             .agg(F.count_distinct("band").alias("n_hit_bands")))
 
 
-def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", num_hashes: int = 16,
-                        bands: int = 4, shingle_n: int = 3) -> DataFrame:
-    """MinHash-LSH near-duplicate *candidate* pairs: shingle -> minhash ->
-    band -> bucket equi-join.  Output: (id_a, id_b) with id_a < id_b,
-    distinct.  Rows per doc = ``bands``; join key = (band, band_hash)."""
-    banded = banded_signatures(df, id_col=id_col, text_col=text_col,
-                               num_hashes=num_hashes, bands=bands,
-                               shingle_n=shingle_n)
-    # materialize the (tiny: bands rows/doc of 3 ints) signature table so
-    # the self-join doesn't recompute the whole shingle->minhash pipeline
-    # for each side; at 100TB this would be a checkpoint to storage.
-    # Cached blocks are LRU-evicted / released with the session; callers
-    # holding the session long-term call release_cached() once candidate
-    # pairs are materialized downstream.
-    from ._cache import persist as _persist
-    banded = _persist(banded, "dedup")
+def band_pairs(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Candidate pairs from a band table ``(id_col, band, band_hash)``:
+    the bucket self-join on (band, band_hash), then ``distinct``.
+    Output: (id_a, id_b) with id_a < id_b.  Both join sides plan the
+    same Exchange over ``banded``, so Spark's exchange reuse computes
+    the band table once (a ``ReusedExchange`` in the executed plan);
+    no persist is needed.  ``banded`` is either `banded_signatures`
+    output or a snapshot's written ``bands`` table."""
     a = banded.alias("a")
     b = banded.alias("b")
-    return (a.join(b, [F.col(f"a.band") == F.col("b.band"),
+    return (a.join(b, [F.col("a.band") == F.col("b.band"),
                        F.col("a.band_hash") == F.col("b.band_hash"),
                        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
             .select(F.col(f"a.{id_col}").alias("id_a"),
                     F.col(f"b.{id_col}").alias("id_b"))
             .distinct())
+
+
+def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
+                        text_col: str = "text", num_hashes: int = 16,
+                        bands: int = 4, shingle_n: int = 3) -> DataFrame:
+    """MinHash-LSH near-duplicate *candidate* pairs: shingle -> minhash ->
+    band -> bucket equi-join (`band_pairs`).  Output: (id_a, id_b) with
+    id_a < id_b, distinct.  Rows per doc = ``bands``; join key =
+    (band, band_hash)."""
+    return band_pairs(banded_signatures(df, id_col=id_col,
+                                        text_col=text_col,
+                                        num_hashes=num_hashes, bands=bands,
+                                        shingle_n=shingle_n), id_col)
 
 
 def split_leakage(df: DataFrame, split_col: str = "split",
@@ -1298,8 +1302,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     if candidates is not None:
         # persisted: the set pipeline (_spread + per-token md5 + shingle
         # roll) is joined once per pair SIDE — without the persist it
-        # recomputes over the full corpus twice (the exact recomputation
-        # lsh_candidate_pairs's persist avoids)
+        # recomputes over the full corpus twice
         from ._cache import persist as _persist
         sh = _persist(shingle_sets(df), "dedup")
         out = (candidates.select("id_a", "id_b")
@@ -1791,10 +1794,15 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
                             StructField("cluster", ntype)]))
     if algorithm == "star":
         return _cc_star(pairs, a, b, max_iters)
-    edges = (pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-             .unionByName(pairs.select(F.col(b).alias("src"),
-                                       F.col(a).alias("dst")))
-             .distinct())
+    # staged once, as in `_cc_star`: every round joins the edges, and
+    # the pairs' own lineage (a MinHash pass over the corpus, for
+    # `lsh_candidate_pairs`, which persists nothing) must not re-run
+    # per round
+    edges = _stage(
+        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        .unionByName(pairs.select(F.col(b).alias("src"),
+                                  F.col(a).alias("dst")))
+        .distinct(), eager=True)
     labels = (edges.select(F.col("src").alias("id"))
               .distinct()
               .withColumn("cluster", F.col("id")))

@@ -7,6 +7,12 @@ One snapshot =
                     the prior side of `incremental_keep`;
   * ``bands``     — the MinHash-LSH band table (`dedup.banded_signatures`),
                     the prior side of `incremental_near_dup`;
+  * ``clusters``  — the near-dup cluster labels (pass
+                    ``cluster_labels=True``): `dedup.connected_components`
+                    over the candidate pairs `dedup.band_pairs` reads
+                    from the ``bands`` table just written (derived
+                    from the docs only when ``bands`` is not written);
+                    appends relabel via `dedup.incremental_components`;
   * ``blocks``    — the sign-LSH embedding block table
                     (`dedup.embedding_block_table`), the prior side of
                     `incremental_embedding_near_dup`;
@@ -117,6 +123,39 @@ def _snap_table(out_dir: str, name: str) -> str:
     import hashlib
     h = hashlib.md5(out_dir.encode()).hexdigest()[:10]
     return f"snap_{h}_{name}"
+
+
+def _family_frame(spark: SparkSession, out_dir: str, name: str,
+                  bucket_tables: dict, schema=None) -> DataFrame:
+    """A written artifact family read back as written: a bucketed one
+    through its catalog table (which knows the schema even when an
+    empty family wrote no part files), a plain one through its parquet
+    path.  ``schema`` (that of the frame just written) skips parquet
+    schema inference, which is a Spark job per read."""
+    meta = bucket_tables.get(name)
+    if meta:
+        return spark.table(meta["table"])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(out_dir, name))
+
+
+def _counted(df: DataFrame):
+    """``(observed, rows)``: ``df`` with its row count observed, and a
+    function that returns that count once an action has run over
+    ``observed`` — the count rides on a write instead of a job of its
+    own.  AQE drops a query stage it has found empty from the final
+    plan, and the observed metrics inside it with it; only when the
+    observation reports nothing is ``df`` counted by a job."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    def rows() -> int:
+        if obs._jo.getRow().size() == 0:
+            return df.count()
+        return int(obs.get["n"])
+    return observed, rows
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -320,6 +359,7 @@ def write_snapshot(out_dir: str, docs: DataFrame | None = None,
 
     written = []
     bucket_tables: dict[str, dict] = {}
+    schemas: dict = {}
     bucket_keys = dict(_BUCKET_KEYS)
     # invalidate any EXISTING snapshot before rewriting its artifacts:
     # a crash mid-rewrite must leave "no manifest" (read_snapshot and
@@ -360,7 +400,12 @@ def write_snapshot(out_dir: str, docs: DataFrame | None = None,
                     for f in df.schema.fields)}
         else:
             df.write.mode("overwrite").parquet(path)
+            schemas[name] = df.schema
         written.append(name)
+
+    def _read_back(name: str) -> DataFrame:
+        return _family_frame(spark_of, out_dir, name, bucket_tables,
+                             schemas.get(name))
 
     bloom_meta: dict[str, dict] = {}
 
@@ -374,18 +419,14 @@ def write_snapshot(out_dir: str, docs: DataFrame | None = None,
             return
         from .bloom import bloom_build
         key, desc = _bloom_probe_key(name)
-        path = os.path.join(out_dir, name)
-        meta = bucket_tables.get(name)
-        # an EMPTY family (e.g. no doc reaches min_len grams) writes no
-        # part files under bucketing, so parquet schema inference would
-        # fail — the catalog entry still knows the schema
-        src = (spark_of.table(meta["table"]) if meta
-               else spark_of.read.parquet(path)).select(key).distinct()
-        # DISTINCT keys, as documented: bands keys on xxhash64(band,
-        # band_hash) over a docs x bands table and blocks on 2^lsh_bits
-        # values — sizing from raw rows would build a filter orders of
-        # magnitude larger than the key set it holds
-        n = max(1, src.count())
+        src = _read_back(name).select(key)
+        # sized from the DISTINCT keys, as documented: bands keys on
+        # xxhash64(band, band_hash) over a docs x bands table and blocks
+        # on 2^lsh_bits values — sizing from raw rows would build a
+        # filter orders of magnitude larger than the key set it holds.
+        # The words build over the raw keys: bit_or is idempotent, so
+        # a repeated key sets the same bits, one shuffle fewer
+        n = max(1, src.distinct().count())
         if bloom_shards > 1:
             # range-sharded filter (bloom.py): per-shard geometry in
             # the manifest; the durable artifact gains a shard column
@@ -454,14 +495,19 @@ def write_snapshot(out_dir: str, docs: DataFrame | None = None,
         # from scratch ONCE here; generation appends then relabel only
         # affected components via `incremental_components` (delta rows
         # carry a later ``gen``; `read_clusters` resolves latest-gen).
+        # The candidate pairs come from the band table just written
+        # (the same rows `lsh_candidate_pairs` would re-derive from
+        # the docs); only a snapshot without the bands family derives
+        # one here.
         if docs is None:
             raise ValueError("cluster_labels needs docs")
         from pyspark.sql import functions as F
-        from .dedup import connected_components, lsh_candidate_pairs
-        _w("clusters",
-           connected_components(lsh_candidate_pairs(
-               docs, num_hashes=num_hashes, bands=bands,
-               shingle_n=shingle_n)).withColumn("gen", F.lit(0)))
+        from .dedup import band_pairs, connected_components
+        banded = (_read_back("bands") if "bands" in doc_fams
+                  else banded_signatures(docs, num_hashes=num_hashes,
+                                         bands=bands, shingle_n=shingle_n))
+        _w("clusters", connected_components(band_pairs(banded))
+           .withColumn("gen", F.lit(0)))
     n_docs = None
     if doc_freq:
         # the generational-IDF artifact family: the vocabulary-sized
@@ -474,8 +520,9 @@ def write_snapshot(out_dir: str, docs: DataFrame | None = None,
         if docs is None:
             raise ValueError("doc_freq needs docs")
         from .text import token_doc_freq
-        _w("doc_freq", token_doc_freq(docs))
-        n_docs = docs.count()
+        counted, n_rows = _counted(docs)
+        _w("doc_freq", token_doc_freq(counted))
+        n_docs = n_rows()
     if labeled is not None:
         # the model-based quality rung: a <= qc_buckets-row weight
         # table (bias/unseen rows included) applied map-side to every
@@ -642,8 +689,12 @@ def _append_snapshot(out_dir: str, docs: DataFrame | None = None,
             return  # family absent from this snapshot — nothing to extend
         # the drop's derivation (a full shuffle of the drop) feeds the
         # table append AND the Bloom fold AND its key count — persist so
-        # it runs once per family, not three times per daily append
-        df = df.persist()
+        # it runs once per family, not three times per daily append.  A
+        # frame the caller already persisted stays the caller's to
+        # release (the drop's band table also feeds the cluster pairs)
+        owned = not df.is_cached
+        if owned:
+            df = df.persist()
         try:
             meta = bucket_tables.get(name)
             if meta:
@@ -657,7 +708,8 @@ def _append_snapshot(out_dir: str, docs: DataFrame | None = None,
             appended.append(name)
             _bloom_a(name, df)
         finally:
-            df.unpersist()
+            if owned:
+                df.unpersist()
 
     def _bloom_a(name: str, df: DataFrame) -> None:
         """Fold the drop's keys into the family's standing Bloom under
@@ -672,7 +724,9 @@ def _append_snapshot(out_dir: str, docs: DataFrame | None = None,
         from .bloom import (bloom_build, bloom_build_sharded, bloom_merge,
                             bloom_merge_sharded)
         key, _desc = _bloom_probe_key(name)
-        keys = df.select(key).distinct()
+        # the words build over the raw keys (bit_or is idempotent);
+        # only the running ``n`` needs them distinct
+        keys = df.select(key)
         path = os.path.join(out_dir, f"bloom_{name}")
         # dispatch on the manifest's PINNED geometry: a snapshot written
         # with bloom_shards>1 carries (shard, word, bits) tables and
@@ -698,62 +752,71 @@ def _append_snapshot(out_dir: str, docs: DataFrame | None = None,
         tmp = path + ".__new"
         merged.write.mode("overwrite").parquet(tmp)
         _swap_path(spark, tmp, path)
-        meta["n"] = int(meta.get("n", 0)) + max(1, keys.count())
+        meta["n"] = int(meta.get("n", 0)) + max(1, keys.distinct().count())
         appended.append(f"bloom_{name}")
 
-    if docs is not None:
-        from .dedup import (banded_signatures, exact_groups,
-                            gram_digests, segment_digests)
-        _a("digests", exact_groups(docs, wide=wide))
-        # membership-guarded BEFORE the derivations: an emb-only
-        # snapshot's manifest has no hashing params for the doc
-        # families, and the parameter lookup must not raise for
-        # families the snapshot doesn't carry
-        if "bands" in tables:
-            _a("bands", banded_signatures(
-                docs, num_hashes=manifest["num_hashes"],
-                bands=manifest["bands"], shingle_n=manifest["shingle_n"]))
-        if "segments" in tables:
-            seg_cols = ["__d", "__d2"] if wide else ["__d"]
-            _a("segments", segment_digests(
-                docs, size=manifest["segment_size"], wide=wide)
-                .select(*seg_cols).distinct())
-        if "grams" in tables:
-            gram_cols = ["__g", "__g2"] if wide else ["__g"]
-            _a("grams", gram_digests(
-                docs, min_len=manifest["sub_min_len"], wide=wide)
-                .select(*gram_cols).distinct())
-    if docs is not None and "clusters" in tables:
-        # generational cluster maintenance (incremental_components):
-        # the drop's bands join the STANDING band table (which already
-        # includes the drop's own just-appended rows, so drop-prior AND
-        # drop-drop candidate pairs come from one equi-join); only the
-        # affected components relabel, and the delta rows append under
-        # a new generation — `read_clusters` resolves latest-gen per id
-        from pyspark.sql import functions as F
-        from .dedup import banded_signatures, incremental_components
+    drop_bands = None
+    if docs is not None and tables & {"bands", "clusters"}:
+        # the drop's band table feeds the bands append (rows, Bloom
+        # fold, key count) AND the cluster pairs below: derive it once,
+        # persisted until both have run.  Derived only for a snapshot
+        # carrying either family: an emb-only snapshot's manifest has
+        # no hashing params for the doc families, and the parameter
+        # lookup must not raise for families it doesn't carry
+        from .dedup import banded_signatures
         drop_bands = banded_signatures(
             docs, num_hashes=manifest["num_hashes"],
-            bands=manifest["bands"], shingle_n=manifest["shingle_n"])
-        meta = bucket_tables.get("bands")
-        standing = (spark.table(meta["table"]) if meta
-                    else spark.read.parquet(os.path.join(out_dir,
-                                                         "bands")))
-        pairs = (drop_bands
-                 .select("band", "band_hash", F.col("doc_id").alias("__a"))
-                 .join(standing.select("band", "band_hash",
-                                       F.col("doc_id").alias("__b")),
-                       ["band", "band_hash"])
-                 .filter(F.col("__a") != F.col("__b"))
-                 .select(F.least("__a", "__b").alias("id_a"),
-                         F.greatest("__a", "__b").alias("id_b"))
-                 .distinct())
-        delta = incremental_components(read_clusters(spark, out_dir),
-                                       pairs, full=False)
-        g = len(manifest.get("generations") or []) + 1
-        (delta.withColumn("gen", F.lit(g)).write.mode("append")
-         .parquet(os.path.join(out_dir, "clusters")))
-        appended.append("clusters")
+            bands=manifest["bands"],
+            shingle_n=manifest["shingle_n"]).persist()
+    try:
+        if docs is not None:
+            from .dedup import exact_groups, gram_digests, segment_digests
+            _a("digests", exact_groups(docs, wide=wide))
+            if "bands" in tables:
+                _a("bands", drop_bands)
+            # membership-guarded BEFORE the derivations, for the same
+            # reason as the band table above
+            if "segments" in tables:
+                seg_cols = ["__d", "__d2"] if wide else ["__d"]
+                _a("segments", segment_digests(
+                    docs, size=manifest["segment_size"], wide=wide)
+                    .select(*seg_cols).distinct())
+            if "grams" in tables:
+                gram_cols = ["__g", "__g2"] if wide else ["__g"]
+                _a("grams", gram_digests(
+                    docs, min_len=manifest["sub_min_len"], wide=wide)
+                    .select(*gram_cols).distinct())
+        if docs is not None and "clusters" in tables:
+            # generational cluster maintenance (incremental_components):
+            # the drop's bands join the STANDING band table (which
+            # already includes the drop's own just-appended rows, so
+            # drop-prior AND drop-drop candidate pairs come from one
+            # equi-join); only the affected components relabel, and the
+            # delta rows append under a new generation — `read_clusters`
+            # resolves latest-gen per id
+            from pyspark.sql import functions as F
+            from .dedup import incremental_components
+            standing = _family_frame(spark, out_dir, "bands",
+                                     bucket_tables)
+            pairs = (drop_bands
+                     .select("band", "band_hash",
+                             F.col("doc_id").alias("__a"))
+                     .join(standing.select("band", "band_hash",
+                                           F.col("doc_id").alias("__b")),
+                           ["band", "band_hash"])
+                     .filter(F.col("__a") != F.col("__b"))
+                     .select(F.least("__a", "__b").alias("id_a"),
+                             F.greatest("__a", "__b").alias("id_b"))
+                     .distinct())
+            delta = incremental_components(read_clusters(spark, out_dir),
+                                           pairs, full=False)
+            g = len(manifest.get("generations") or []) + 1
+            (delta.withColumn("gen", F.lit(g)).write.mode("append")
+             .parquet(os.path.join(out_dir, "clusters")))
+            appended.append("clusters")
+    finally:
+        if drop_bands is not None:
+            drop_bands.unpersist()
     if docs is not None and "doc_freq" in tables:
         # MERGE family, not an append family: per-token doc counts of
         # disjoint generations ADD (token_doc_freq_merge), so the
@@ -763,12 +826,12 @@ def _append_snapshot(out_dir: str, docs: DataFrame | None = None,
         # half-merged table on a mid-write crash.
         from .text import token_doc_freq_merge
         fpath = os.path.join(out_dir, "doc_freq")
-        merged = token_doc_freq_merge(spark.read.parquet(fpath), docs)
+        counted, n_rows = _counted(docs)
+        merged = token_doc_freq_merge(spark.read.parquet(fpath), counted)
         tmp = fpath + ".__new"
         merged.write.mode("overwrite").parquet(tmp)
         _swap_path(spark, tmp, fpath)
-        manifest["n_docs"] = (int(manifest.get("n_docs") or 0)
-                              + docs.count())
+        manifest["n_docs"] = int(manifest.get("n_docs") or 0) + n_rows()
         appended.append("doc_freq")
     if emb is not None:
         from .dedup import embedding_block_table
@@ -984,10 +1047,8 @@ def _restore_survivors(spark, out_dir: str, manifest: dict,
                 "for a corpus-pass restoration instead")
         retr = spark.read.parquet(
             os.path.join(out_dir, "tomb_bands")).distinct()
-        meta = (manifest.get("bucket_tables") or {}).get("bands")
-        standing = (spark.table(meta["table"]) if meta
-                    else spark.read.parquet(os.path.join(out_dir,
-                                                         "bands")))
+        standing = _family_frame(spark, out_dir, "bands",
+                                 manifest.get("bucket_tables") or {})
         # retracted docs' band rows -> retained docs sharing a bucket;
         # both joins broadcast takedown-sized sides, the mate id set
         # collects (takedown-sized) and pushes into the corpus scan as

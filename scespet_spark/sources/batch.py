@@ -118,10 +118,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> Stream:
     """The `events` table as an event stream: ``ts`` is event-time and
     ``event_id`` the replay-order tie-breaker (it is assigned in

@@ -46,6 +46,26 @@ def test_bloom_merge_equals_whole_build(spark):
     assert bloom_dense(bloom_merge(a, b), m) == bloom_dense(whole, m)
 
 
+def test_bloom_words_over_raw_keys_equal_distinct_keys(spark):
+    """``bit_or`` is idempotent, so a word table built over a key
+    column with repeats (and NULLs) equals the one built over its
+    distinct keys: the snapshot builds words over raw keys and keeps
+    ``distinct`` only for the key count."""
+    from scespet_spark.operators.bloom import bloom_build_sharded
+    raw = (spark.range(600)
+           .select(F.when(F.col("id") % 50 == 0, None)
+                   .otherwise(F.col("id") % 97 * 7919).alias("d")))
+    assert raw.distinct().count() < raw.count()
+    a, m, k = bloom_build(raw, "d", n_items=98, fpp=0.01)
+    b, _, _ = bloom_build(raw.distinct(), "d", n_items=98, fpp=0.01)
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    sa, _, _ = bloom_build_sharded(raw, "d", n_items=98, fpp=0.01, shards=3)
+    sb, _, _ = bloom_build_sharded(raw.distinct(), "d", n_items=98,
+                                   fpp=0.01, shards=3)
+    assert (sorted(map(tuple, sa.collect()))
+            == sorted(map(tuple, sb.collect())))
+
+
 def test_bloom_filter_col_rejects_wrong_geometry(spark):
     with pytest.raises(ValueError, match="dense word list"):
         bloom_filter_col({"m": 128, "k": 2, "words": [0]}, F.lit(1))
@@ -731,6 +751,62 @@ def test_snapshot_doc_freq_family_lifecycle(spark, tmp_path):
     write_snapshot(other, docs=prior)
     with pytest.raises(ValueError, match="doc_freq"):
         read_doc_freq(spark, other)
+
+
+@pytest.fixture(params=[False, True], ids=["no_aqe", "aqe"])
+def aqe(spark, request):
+    """Run under both settings: AQE drops a query stage it finds empty,
+    and the observed metrics inside it with it."""
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", str(request.param).lower())
+    yield request.param
+    spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+@pytest.mark.parametrize("rows", [
+    [(1, "alpha beta"), (1, "alpha beta"), (2, None), (3, ""),
+     (4, "gamma")],
+    [(1, None), (2, ""), (2, "   ")],
+    [],
+], ids=["mixed", "no_tokens", "empty"])
+def test_snapshot_n_docs_counts_every_row(spark, tmp_path, aqe, rows):
+    """The manifest's ``n_docs`` (observed on the doc_freq write, and on
+    the merge write of an append) equals ``docs.count()``: NULL and
+    empty text and a repeated ``doc_id`` each count as a row, and a
+    frame with no tokens at all, or no rows, counts too."""
+    from scespet_spark.operators.snapshot import read_doc_freq, write_snapshot
+    docs = _docs(spark, rows)
+    out = str(tmp_path / "snap")
+    write_snapshot(out, docs=docs, doc_freq=True, doc_families=())
+    _, n = read_doc_freq(spark, out)
+    assert n == docs.count() == len(rows)
+    write_snapshot(out, docs=docs, mode="append")
+    _, n2 = read_doc_freq(spark, out)
+    assert n2 == 2 * len(rows)
+
+
+def test_snapshot_bloom_words_match_distinct_key_build(spark, tmp_path):
+    """The written ``bloom_bands`` words equal a build over the band
+    table's DISTINCT keys under the manifest's geometry, and the
+    manifest's ``n`` is that distinct key count."""
+    import json
+
+    from scespet_spark.operators.bloom import bloom_build
+    from scespet_spark.operators.dedup import band_bloom_key
+    from scespet_spark.operators.snapshot import read_snapshot, write_snapshot
+    docs = _docs(spark, [(i, f"alpha beta gamma w{i % 3} delta")
+                         for i in range(12)])
+    out = str(tmp_path / "snap")
+    write_snapshot(out, docs=docs, doc_families=("bands",), bloom_fpp=0.01)
+    meta = json.loads((tmp_path / "snap" / "manifest.json")
+                      .read_text())["blooms"]["bands"]
+    keys = (read_snapshot(spark, out)["bands"]
+            .select(band_bloom_key().alias("k")).distinct())
+    assert meta["n"] == keys.count() < 12 * 4
+    want, _, _ = bloom_build(keys, "k", m_bits=meta["m"], k=meta["k"])
+    got = spark.read.parquet(str(tmp_path / "snap" / "bloom_bands"))
+    assert (sorted(map(tuple, got.collect()))
+            == sorted(map(tuple, want.collect())))
 
 
 def test_snapshot_doc_families_restriction(spark, tmp_path):

@@ -17,9 +17,30 @@ from scespet_spark.streaming.live import LiveStream
 
 kw = json.loads(sys.argv[1])
 spark = get_spark(app_name="engine-probe", cpus=3, **kw)
+spark.sparkContext.setLogLevel("OFF")
 out = {"conf": [spark.conf.get(k, None) for k in (
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum")]}
+
+from pyspark.errors import PySparkException
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+
+out["debugging"] = [
+    spark.conf.get("spark.python.sql.dataFrameDebugging.enabled"),
+    is_debugging_enabled()]
+errors = {}
+spark.conf.set("spark.sql.ansi.enabled", "true")
+for name, col in (("bad_column", F.col("nope") + 1),
+                  ("divide_by_zero", F.lit(1) / F.col("id"))):
+    try:
+        spark.range(1).select(col).collect()
+    except PySparkException as e:
+        # the condition, and whether the error names the Python
+        # operator that built the failing expression (call-site capture)
+        errors[name] = [e.getCondition(), "__truediv__" in str(e)]
+spark.conf.unset("spark.sql.ansi.enabled")
+out["errors"] = errors
 
 if not kw:
     # a working set of 150 distinct generated classes, run twice: the
@@ -90,6 +111,7 @@ def test_live_gets_one_state_partition_per_core_batch_keeps_32():
     nothing the second time."""
     got = _probe()
     assert got["conf"] == ["3", "32"]
+    assert got["debugging"] == ["false", False]
     assert got["codegen_cache"] == "1000"
     first, second = got["codegen_compiles"]
     assert first >= 150, got
@@ -101,3 +123,21 @@ def test_live_gets_one_state_partition_per_core_batch_keeps_32():
 
 def test_explicit_shuffle_partitions_sets_only_that():
     assert _probe(shuffle_partitions=5)["conf"] == ["5", None]
+
+
+def test_call_site_capture_off_keeps_error_classes():
+    """``get_spark`` turns PySpark's call-site capture off.  A bad column
+    and a runtime division by zero raise the same error classes as with
+    it on; only the runtime error stops naming the Python operator
+    (``__truediv__``) that built the failing expression."""
+    off = _probe(extra_conf={})
+    on = _probe(extra_conf={
+        "spark.python.sql.dataFrameDebugging.enabled": "true"})
+    assert off["debugging"] == ["false", False]
+    assert on["debugging"] == ["true", True]
+    assert off["errors"] == {
+        "bad_column": ["UNRESOLVED_COLUMN.WITH_SUGGESTION", False],
+        "divide_by_zero": ["DIVIDE_BY_ZERO", False]}
+    assert on["errors"] == {
+        "bad_column": ["UNRESOLVED_COLUMN.WITH_SUGGESTION", False],
+        "divide_by_zero": ["DIVIDE_BY_ZERO", True]}

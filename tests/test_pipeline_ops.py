@@ -485,12 +485,28 @@ def test_arrow_udf_null_and_ragged_vector_guards(spark):
     assert codes[2] is None and codes[3] is None and codes[4] is None
 
 
-def test_lsh_release_cached(docs):
+def test_lsh_pairs_reuse_exchange_without_persist(docs):
+    """Both sides of the band self-join plan the same Exchange, so
+    Spark's exchange reuse computes the band table once: the executed
+    plan reads it through a ReusedExchange, nothing is cached, and the
+    pairs are the bucket co-members of the band table."""
+    from collections import defaultdict
+
     from scespet_spark.operators import dedup
+    dedup.release_cached()  # drain what earlier tests registered
     pairs = dedup.lsh_candidate_pairs(docs)
-    pairs.count()  # materialize (populates the persisted signature table)
-    assert dedup.release_cached() >= 1
-    assert dedup.release_cached() == 0  # idempotent once drained
+    got = sorted(tuple(r) for r in pairs.collect())
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan
+    assert "InMemoryTableScan" not in plan
+    assert dedup.release_cached() == 0
+    assert dedup.release_cached() == 0
+    buckets = defaultdict(set)
+    for r in dedup.banded_signatures(docs).collect():
+        buckets[(r.band, r.band_hash)].add(r.doc_id)
+    want = sorted({(a, b) for ids in buckets.values()
+                   for a in ids for b in ids if a < b})
+    assert got == want and (0, 1) in got
 
 
 def test_token_doc_freq(docs):
@@ -3440,6 +3456,66 @@ def test_snapshot_cluster_labels_generational(spark, tmp_path,
     compact_snapshot(out, spark, families=["clusters"])
     after = {r.id: r.cluster for r in read_clusters(spark, out).collect()}
     assert after == got
+
+
+def _cluster_docs(spark):
+    body = "one two three four five six seven eight nine ten eleven twelve"
+    return spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"),
+         (2, "alpha beta gamma delta epsilon zeta eta"),
+         (5, body), (6, body + " thirteen"), (7, body + " fourteen"),
+         (9, "totally unrelated content nine ten eleven")],
+        "doc_id long, text string")
+
+
+def test_snapshot_clusters_without_bands_family(spark, tmp_path):
+    """A snapshot that writes no band table derives one for its
+    clusters: the labels still equal the from-scratch LSH components."""
+    from scespet_spark.operators.dedup import connected_components
+    from scespet_spark.operators.snapshot import read_clusters, write_snapshot
+    docs = _cluster_docs(spark)
+    out = str(tmp_path / "snap")
+    written = write_snapshot(out, docs=docs, cluster_labels=True,
+                             doc_families=("digests",))
+    assert "bands" not in written and "clusters" in written
+    got = {r.id: r.cluster for r in read_clusters(spark, out).collect()}
+    want = {r.id: r.cluster for r in connected_components(
+        lsh_candidate_pairs(docs)).collect()}
+    assert got == want
+    assert got[2] == 1 and got[6] == 5 and got[7] == 5
+
+
+@_pytest.mark.parametrize("bucket_probes", [None, 2])
+def test_snapshot_clusters_read_written_bands(spark, tmp_path, monkeypatch,
+                                              bucket_probes):
+    """With the bands family written, the clusters' candidate pairs read
+    that table: their plan scans the written ``bands`` files and holds
+    no MinHash aggregate over the docs, and the labels equal the
+    from-scratch LSH components."""
+    from scespet_spark.operators import dedup
+    from scespet_spark.operators.snapshot import read_clusters, write_snapshot
+    seen = []
+    real = dedup.band_pairs
+
+    def spy(banded, *a, **kw):
+        seen.append(real(banded, *a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(dedup, "band_pairs", spy)
+    docs = _cluster_docs(spark)
+    out = str(tmp_path / "snap")
+    write_snapshot(out, docs=docs, cluster_labels=True,
+                   doc_families=("bands",), bucket_probes=bucket_probes)
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    files = seen[0].inputFiles()
+    assert files and all("/snap/bands/" in f for f in files), files
+    assert not [l for l in plan.splitlines()
+                if "HashAggregate" in l and "min(" in l], plan
+    got = {r.id: r.cluster for r in read_clusters(spark, out).collect()}
+    want = {r.id: r.cluster for r in dedup.connected_components(
+        real(dedup.banded_signatures(docs))).collect()}
+    assert got == want and got[7] == 5
 
 
 def test_banded_signatures_rowwise_parity(spark):
